@@ -336,32 +336,31 @@ def dedup_increment(
     ).localCheckpoint(eager=True)
 
     # --- ID contract: every new id above every base member id ----------
+    # Legacy-shape guards, for an UNPINNED index only: its signatures
+    # may have a different width than cfg.num_perm, or its content_hash
+    # may be the old hex string (64 bytes — would join string==binary
+    # against the new 16-byte key and silently match NOTHING). These
+    # fold into the id-bound aggregate over the WHOLE index (no extra
+    # job, wherever the bad rows sit), but size(minhash) reads the
+    # ~1 KB/row signature column; a pinned index skips that read, since
+    # its fingerprint (checked above) fixes both the signature width and
+    # the content key, and keeps the 8 B/row member_id scan.
+    index_aggs = [F.max("member_id").alias("hi")]
+    if pinned is None:
+        index_aggs += [
+            F.min(F.size("minhash")).alias("sig_lo"),
+            F.max(F.size("minhash")).alias("sig_hi"),
+            F.max(F.octet_length("content_hash")).alias("ch_len"),
+        ]
     bounds = (
         enriched.agg(F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n"))
-        .crossJoin(index.agg(F.max("member_id").alias("hi")))
-        .crossJoin(
-            # legacy-shape guards on a BOUNDED sample (r06): an index
-            # whose signatures have a different width than cfg.num_perm
-            # (unpinned legacy index), or a hex-string content_hash
-            # (64 bytes — would join string==binary against the new
-            # 16-byte key and silently match NOTHING), must fail fast.
-            # Widths/key-shape are uniform per index by construction
-            # (one enrich kernel wrote every row) and the sig_cfg pin
-            # above is the primary guard — scanning the FULL 1 KB/row
-            # minhash column just to take size() cost one whole-index
-            # read per increment, the single biggest base-coupled read
-            # of the probe path.
-            index.limit(1024).agg(
-                F.min(F.size("minhash")).alias("sig_lo"),
-                F.max(F.size("minhash")).alias("sig_hi"),
-                F.max(F.octet_length("content_hash")).alias("ch_len"),
-            )
-        )
+        .crossJoin(index.agg(*index_aggs))
         .first()
+        .asDict()
     )
     min_new, max_base = bounds["lo"], bounds["hi"]
     metrics["n_new_docs"] = bounds["n"]
-    if bounds["sig_lo"] is not None and (
+    if bounds.get("sig_lo") is not None and (
         bounds["sig_lo"] != cfg.num_perm or bounds["sig_hi"] != cfg.num_perm
     ):
         from .io import ConfigMismatch
@@ -370,7 +369,7 @@ def dedup_increment(
             f"index minhash width {bounds['sig_lo']}..{bounds['sig_hi']} "
             f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
         )
-    if bounds["ch_len"] is not None and bounds["ch_len"] != 16:
+    if bounds.get("ch_len") is not None and bounds["ch_len"] != 16:
         from .io import ConfigMismatch
 
         raise ConfigMismatch(
@@ -576,7 +575,12 @@ def dedup_increment(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         max_iterations=cfg.cc_max_iterations,
         checkpoint_mode=cfg.cc_checkpoint_mode,
-    ).localCheckpoint(eager=True)
+    )
+    if not comp.isLocal():
+        # above the driver union-find bound CC hands back the star
+        # rounds' lazy plan, which assignments, merges and the index
+        # remap below would each recompute
+        comp = comp.localCheckpoint(eager=True)
 
     assignments = (
         enriched.select("doc_id")

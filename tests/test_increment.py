@@ -443,3 +443,79 @@ def test_increment_collect_stats_reports_candidate_accounting(
     a = sorted(map(tuple, inc.assignments.collect()))
     b = sorted(map(tuple, plain.assignments.collect()))
     assert a == b
+
+
+def _index_rows(index) -> list[tuple]:
+    return sorted(
+        (r["member_id"], r["cluster_id"], bytes(r["content_hash"]),
+         tuple(r["minhash"]))
+        for r in index.collect()
+    )
+
+
+def test_increment_identical_under_both_cc_paths(
+    spark, split, inc_run, monkeypatch
+):
+    """The driver union-find and the large-/small-star rounds (forced
+    by lowering the driver-path edge bound) must hand the increment the
+    same partition: identical assignments, merges and updated index."""
+    from deduplication_spark.operators import components
+
+    base_df, new_df = split
+    base_res, _ = inc_run
+    cfg = DedupConfig()
+    index = index_from_enriched(base_res.enriched, base_res.assignments, cfg=cfg)
+
+    def run():
+        inc = dedup_increment(spark, new_df, index, cfg, base_docs=base_df)
+        return (
+            sorted(map(tuple, inc.assignments.collect())),
+            sorted(map(tuple, inc.merges.collect())),
+            _index_rows(inc.index),
+        )
+
+    driver = run()
+    monkeypatch.setattr(components, "_DRIVER_MAX_EDGES", -1)
+    star = run()
+    assert driver == star
+    # the batch really exercised CC: some new docs joined a cluster
+    assert any(not canon for _, _, canon in driver[0])
+
+
+@pytest.mark.parametrize("legacy", ["minhash_width", "hex_content_hash"])
+def test_legacy_index_guard_scans_whole_index(spark, inc_run, legacy):
+    """A legacy-shaped row anywhere in an unpinned index fails the probe
+    fast: here the bad row sits in one partition after 2,400 good rows,
+    past any bounded sample of the first 1,024."""
+    from deduplication_spark.io import ConfigMismatch
+
+    _, inc = inc_run
+    # legacy indexes predate the sig_cfg pin: drop it
+    idx = inc.index.select(
+        "member_id",
+        "cluster_id",
+        "content_hash",
+        F.col("minhash").alias("minhash", metadata={}),
+    )
+    assert "sig_cfg" not in idx.schema["minhash"].metadata
+    good = idx
+    for k in (1, 2):
+        good = good.union(
+            idx.withColumn("member_id", F.col("member_id") + k * 100_000)
+        )
+    assert good.count() > 1024
+    bad_row = idx.limit(1).withColumn("member_id", F.lit(300_000).cast("long"))
+    if legacy == "minhash_width":
+        bad_row = bad_row.withColumn("minhash", F.slice("minhash", 1, 64))
+        match = "minhash width"
+    else:
+        bad_row = bad_row.withColumn(
+            "content_hash", F.concat(*(["content_hash"] * 4))
+        )
+        match = "content_hash is 64 bytes"
+    legacy_index = good.union(bad_row).coalesce(1)
+    nxt = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [10_000_000], "text": ["legacy guard batch"]})
+    )
+    with pytest.raises(ConfigMismatch, match=match):
+        dedup_increment(spark, nxt, legacy_index, DedupConfig())
